@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -379,10 +380,13 @@ def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     rnd = os.environ.get("SPARK_GRAFT_ROUND")
     if rnd is None:
+        # only BENCH_r{N}.json: side records such as BENCH_r12_c8.json
+        # carry a suffix that is not part of the round number
+        pattern = re.compile(r"^BENCH_r(\d+)\.json$")
         recorded = [
-            int(f[len("BENCH_r"):-len(".json")])
-            for f in os.listdir(here)
-            if f.startswith("BENCH_r") and f.endswith(".json")
+            int(m.group(1))
+            for m in (pattern.match(f) for f in os.listdir(here))
+            if m
         ]
         rnd = str(max(recorded, default=0) + 1)
     with open(os.path.join(here, f"BENCH_LOCAL_r{rnd}.json"), "w") as f:

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from news_lakehouse_spark.operators.iterstate import LineageTruncator
+from news_lakehouse_spark.materialize import LineageTruncator
 
 __all__ = ["train_bpe_merges", "apply_bpe"]
 

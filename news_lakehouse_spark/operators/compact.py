@@ -19,6 +19,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from news_lakehouse_spark.operators.merge import _overwrite_in_place
+
 
 def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(total_bytes, n_data_files) of a table directory tree."""
@@ -55,8 +57,8 @@ def compact_parquet_table(
     rarely pays for itself below ~target x 10 per partition).
 
     Returns {"files_before", "files_after", "bytes"} so callers can
-    log/assert the effect. The rewrite is the same localCheckpoint +
-    overwrite cycle as upsert_parquet_table — safe to run in place;
+    log/assert the effect. The rewrite is the same staged overwrite as
+    upsert_parquet_table (of the whole table) — safe to run in place;
     like any non-transactional rewrite it must not race a concurrent
     writer (Iceberg/Delta is the answer when that matters, see
     operators/merge.py's backend note).
@@ -67,10 +69,6 @@ def compact_parquet_table(
         out = df.repartition(*[F.col(c) for c in partition_by])
     else:
         out = df.repartition(max(1, math.ceil(total / target_file_bytes)))
-    staged = out.localCheckpoint(eager=True)
-    writer = staged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    _overwrite_in_place(out, path, partition_by)
     _, after = _dir_stats(spark, path)
     return {"files_before": before, "files_after": after, "bytes": total}

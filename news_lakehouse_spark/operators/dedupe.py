@@ -31,10 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from news_lakehouse_spark.operators.iterstate import (
-    LineageTruncator,
-    truncate_lineage,
-)
+from news_lakehouse_spark.materialize import LineageTruncator, cut
 
 # Deterministic affine-permutation parameters. p = 2^31-1 keeps
 # h (< p) * a (< p) + b below 2^62 — no int64 overflow in column math.
@@ -395,7 +392,7 @@ def minhash_near_duplicates(
     # O(docs × bands) key table (24-byte rows — tiny next to the
     # corpus) runs the kernel once; reliable mode checkpoints to the
     # configured FS, local mode holds executor blocks.
-    band_entries = truncate_lineage(band_entries)
+    band_entries, _ = cut(band_entries)
     if max_bucket_size is not None:
         # bucket-size filter shares the self-join's shuffle key
         # (band, band_hash): the exchange is reused, the count is a
@@ -701,7 +698,7 @@ def connected_components(
     convergence is 2-3 rounds in practice — the regime where plain
     propagation beats the fancier alternatives. Each iteration is one
     join + one groupBy on the label frame (never an all-pairs
-    expansion), with iterstate.truncate_lineage cutting each round's plan
+    expansion), with materialize.cut cutting each round's plan
     the convergence check is a limit(1) probe.
 
     ``method="star"`` — alternating large-star/small-star (Kiveris et
@@ -733,8 +730,8 @@ def connected_components(
     # label = current best-known component min per node
     labels = edges.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("lbl"))
     labels = labels.select(F.col("a").alias("id"), F.least("lbl", "id").alias("lbl"))
-    # keeps the 2 newest round checkpoints (the convergence test below
-    # reads rounds n and n-1 together), deletes older — bounded ckpt FS
+    # keeps the 2 newest rounds (the convergence test below reads
+    # rounds n and n-1 together), releases older ones
     _ckpt = LineageTruncator()
     for _ in range(max_iters):
         # propagate: node's new label = min(own, min over neighbors' labels)
@@ -794,7 +791,7 @@ def _connected_components_star(
     converges to per-component stars centered on the component minimum
     in O(log^2 n) rounds. Convergence = the (count, xxhash64-sum)
     fingerprint of the edge set is stable across a full round — two
-    tiny aggregate actions per round; iterstate.truncate_lineage cuts the
+    tiny aggregate actions per round; materialize.cut cuts the
     iterative lineage exactly as the propagation plan does.
     """
     _ckpt = LineageTruncator()  # bounded checkpoint retention
@@ -1209,7 +1206,7 @@ def incremental_minhash_dedupe(
     # materialize the O(batch × bands) key table once (see the same
     # note in minhash_near_duplicates); be_c is consumed once and
     # stays lazy
-    be_b = truncate_lineage(be_b)
+    be_b, _ = cut(be_b)
 
     def _verify(cands: DataFrame, a: str, b: str, sh_a: DataFrame, sh_b_: DataFrame):
         left = sh_a.select(F.col(id_col).alias(a), F.col("shingles").alias("__sa"))

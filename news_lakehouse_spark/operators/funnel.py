@@ -20,6 +20,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from news_lakehouse_spark.materialize import cut
+
 
 def funnel_conversion(
     events: DataFrame,
@@ -62,7 +64,7 @@ def funnel_conversion(
         # materialize each (tiny) frontier: without this, step k's count
         # and step k+1's join both re-derive the whole step-1..k chain,
         # making an N-step funnel O(N^2) event-table scans
-        frontier = nxt.localCheckpoint(eager=True) if materialize else nxt
+        frontier = cut(nxt)[0] if materialize else nxt
         counts.append((step, frontier.agg(F.count("*").alias("n")).select("n")))
 
     rows = [

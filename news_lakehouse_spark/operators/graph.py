@@ -42,10 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from news_lakehouse_spark.operators.iterstate import (
-    LineageTruncator,
-    truncate_lineage,
-)
+from news_lakehouse_spark.materialize import LineageTruncator, cut
 
 __all__ = ["bfs_distances", "pagerank", "triangle_stats"]
 
@@ -149,8 +146,8 @@ def pagerank(
     # per-row base: uniform, or concentrated on the teleport set
     base_seed = ((100 - damping_pct) * units * n_nodes) // (100 * n_seeds)
     base_expr = f"if(is_seed, {base_seed}L, 0L)"
-    # per-loop truncator: deletes round n-2's reliable checkpoint once
-    # round n lands, so a long run holds <=2 x state on the ckpt FS.
+    # per-loop truncator: releases round n-2 once round n is
+    # materialized, so a long run holds <=2 x state.
     # LOCAL mode defers materialization (eager=False) for every round
     # but the LAST: each round's state is referenced only by the next
     # round's plan (dangling-free graphs) or by its dang broadcast
@@ -282,16 +279,18 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
         .groupBy("node")
         .agg(F.count("*").alias("triangles"))
     )
-    out = deg.join(per_node, "node", "left").select(
-        "node",
-        "degree",
-        # integer DIV: float division is exact only below 2^53, and
-        # the DuckDB oracle uses '//' — extreme degrees must not drift
-        F.expr("degree * (degree - 1) DIV 2").alias("wedges"),
-        F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles"),
     # node-sized: materialize so the multi-referenced cached inputs
     # can be released before the caller consumes the result
-    ).transform(truncate_lineage)
+    out, _ = cut(
+        deg.join(per_node, "node", "left").select(
+            "node",
+            "degree",
+            # integer DIV: float division is exact only below 2^53, and
+            # the DuckDB oracle uses '//' — extreme degrees must not drift
+            F.expr("degree * (degree - 1) DIV 2").alias("wedges"),
+            F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles"),
+        )
+    )
     und.unpersist()
     oriented.unpersist()
     return out
@@ -329,27 +328,23 @@ def bfs_distances(
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     ).repartition("src").persist()
-    state = (
+    # hops are never released: the BFS exception in materialize
+    state, _ = cut(
         seeds.select(F.col(seed_col).cast("long").alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("int").alias("dist"))
-        # stateless truncation on purpose: visited below unions EVERY
-        # hop's frontier, so no hop's checkpoint is dead until the
-        # caller finishes — LineageTruncator's delete would be wrong
-        .transform(truncate_lineage)
     )
     # visited = lazy union of per-hop checkpointed frontiers: each
     # node is materialized exactly once (O(V) total, not O(V*hops))
     # and the union's lineage stays flat because every leg is flat
     frontier, visited = state, state
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt, _ = cut(
             e.join(frontier, e.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(hop).cast("int").alias("dist"))
-            .transform(truncate_lineage)
         )
         if nxt.limit(1).count() == 0:
             break

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from news_lakehouse_spark.materialize import cut
 from news_lakehouse_spark.operators.dedupe import normalized_text
 
 
@@ -129,13 +130,13 @@ def dsir_importance_weights(
     if cache_tokens and materialize:
         # hand the cache over: materialize the (per-doc, much smaller)
         # scores, then release the corpus-sized token table.
-        # localCheckpoint, not persist: checkpoint blocks are freed by
+        # A cut, not a persist: local checkpoint blocks are freed by
         # the ContextCleaner when the frame is garbage-collected,
         # where an unreachable persist pins executor memory for the
         # whole session. materialize=False keeps plan construction
         # lazy for .explain()/audit consumers (the token table is then
         # re-derived by each downstream action).
-        scored = scored.localCheckpoint(eager=True)
+        scored, _ = cut(scored)
         toks.unpersist()
     # every pool document gets a row — docs whose normalized text has
     # zero tokens (empty/whitespace/punctuation-only) score 0, they are

@@ -45,10 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from news_lakehouse_spark.sources.transaction import (
-    VersionedParquetTable,
-    _materialize_churn,
-)
+from news_lakehouse_spark.materialize import reuse
+from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
 _SYNC_KEY = "ivm_synced_to"
 _SRC_KEY = "ivm_source"
@@ -123,12 +121,10 @@ class IncrementalAggView:
         # semi-join) and merge() evaluates ITS source several times
         # (key sets, affected partitions, the rewrite) — materialize
         # both the O(churn) feed and the view-sized delta so neither
-        # plan re-derives the feed from table history per evaluation
-        # (lineage-truncated in local mode, recomputable persist on
-        # clusters — see transaction._materialize_churn).
-        feed, rel_feed = _materialize_churn(source.changes(last, src_v))
+        # plan re-derives the feed from table history per evaluation.
+        feed, rel_feed = reuse(source.changes(last, src_v))
         try:
-            updated, rel_upd = _materialize_churn(
+            updated, rel_upd = reuse(
                 self._apply_delta(feed, source, src_v)
             )
             try:
@@ -371,7 +367,7 @@ class IncrementalJoinAggView:
         parts = []
         rel_l = rel_r = None
         if new_l > last_l:
-            dl, rel_l = _materialize_churn(
+            dl, rel_l = reuse(
                 left.changes(last_l, new_l).withColumn("_sign", sign)
             )
             parts.append(
@@ -384,7 +380,7 @@ class IncrementalJoinAggView:
         else:
             dl = None
         if new_r > last_r:
-            dr, rel_r = _materialize_churn(
+            dr, rel_r = reuse(
                 right.changes(last_r, new_r).withColumn("_sign", sign)
             )
             parts.append(
@@ -426,7 +422,7 @@ class IncrementalJoinAggView:
                 out.append(
                     F.when(alive, nn).otherwise(F.lit(0)).alias(f"nn_{c}")
                 )
-            updated, rel_upd = _materialize_churn(joined.select(*out))
+            updated, rel_upd = reuse(joined.select(*out))
             try:
                 self.table.merge(updated, self.group_by, properties=props)
             finally:

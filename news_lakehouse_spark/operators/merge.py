@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from news_lakehouse_spark.materialize import cut
+
 
 def _guard_source(source: DataFrame, keys: list[str], order_by: list[Column] | None) -> DataFrame:
     """Key-completeness + cardinality guard (reference b2s:426-446)."""
@@ -187,22 +189,7 @@ def delete_rows(
         affected = filter_to_partitions(target, parts, partition_by)
         kept = affected.join(F.broadcast(dk), on=keys, how="left_anti")
         removed = affected.count() - kept.count()
-        staged = kept.localCheckpoint(eager=True)
-        prior_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            staged.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior_mode)
-        written = {
-            tuple(r.asDict()[c] for c in partition_by)
-            for r in staged.select(*partition_by).distinct().collect()
-        }
-        emptied = [
-            p for p in parts if tuple(p[c] for c in partition_by) not in written
-        ]
-        if emptied:
-            _delete_partition_dirs(spark, path, partition_by, emptied)
+        _overwrite_in_place(kept, path, partition_by, parts)
         return removed
 
     kept = target.join(F.broadcast(dk), on=keys, how="left_anti")
@@ -210,7 +197,7 @@ def delete_rows(
     if removed == 0:
         # no-op delete must not rewrite (and risk) the whole table
         return 0
-    kept.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+    _overwrite_in_place(kept, path)
     return removed
 
 
@@ -340,6 +327,45 @@ def _delete_partition_dirs(
             fs.delete(jpath, True)
 
 
+def _overwrite_in_place(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+    parts: list[dict] | None = None,
+) -> None:
+    """Overwrite the parquet table at ``path`` with ``df``, which may
+    read ``path`` itself.
+
+    ``df`` is cut first (see :mod:`news_lakehouse_spark.materialize`):
+    parquet cannot overwrite the files it is reading, and once the
+    overwrite starts the rows can no longer be recomputed from them.
+    Without ``parts`` the whole table is replaced. With ``parts`` (the
+    partitions ``df`` was derived from) the write is a dynamic
+    partition overwrite, which only replaces partitions present in the
+    output — so each of ``parts`` that ``df`` no longer holds (every
+    key moved or deleted out) keeps its stale files, and its directory
+    is dropped explicitly. The staging is released only after the
+    write and that check are done."""
+    staged, release = cut(df)
+    try:
+        writer = staged.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        if parts is None:
+            writer.parquet(path)
+            return
+        writer.option("partitionOverwriteMode", "dynamic").parquet(path)
+        written = {
+            tuple(r.asDict()[c] for c in partition_by)
+            for r in staged.select(*partition_by).distinct().collect()
+        }
+        emptied = [p for p in parts if tuple(p[c] for c in partition_by) not in written]
+        if emptied:
+            _delete_partition_dirs(staged.sparkSession, path, partition_by, emptied)
+    finally:
+        release()
+
+
 def upsert_parquet_table(
     spark: SparkSession,
     source: DataFrame,
@@ -396,14 +422,7 @@ def upsert_parquet_table(
             r.asDict()
             for r in new_parts.unionByName(old_parts).distinct().collect()
         ]
-        cond = None
-        for p in parts:
-            c = None
-            for k, v in p.items():
-                e = F.col(k).eqNullSafe(F.lit(v))
-                c = e if c is None else (c & e)
-            cond = c if cond is None else (cond | c)
-        affected_target = target.filter(cond) if cond is not None else target.limit(0)
+        affected_target = filter_to_partitions(target, parts, partition_by)
         merged = (
             merge_insert_only(affected_target, source, keys, evolve_schema=evolve_schema)
             if insert_only
@@ -411,29 +430,11 @@ def upsert_parquet_table(
                 affected_target, source, keys, order_by, evolve_schema=evolve_schema
             )
         )
-        # localCheckpoint breaks the read-from/write-to-same-path cycle.
-        staged = merged.localCheckpoint(eager=True)
-        prior_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            staged.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior_mode)
-        # Dynamic overwrite only rewrites partitions present in the
-        # output — a partition emptied by a key moving out keeps its
-        # stale files. Drop those directories explicitly.
-        written = {
-            tuple(r.asDict()[c] for c in partition_by)
-            for r in staged.select(*partition_by).distinct().collect()
-        }
-        emptied = [p for p in parts if tuple(p[c] for c in partition_by) not in written]
-        if emptied:
-            _delete_partition_dirs(spark, path, partition_by, emptied)
+        _overwrite_in_place(merged, path, partition_by, parts)
     else:
         merged = (
             merge_insert_only(target, source, keys, evolve_schema=evolve_schema)
             if insert_only
             else merge_upsert(target, source, keys, order_by, evolve_schema=evolve_schema)
         )
-        # Parquet can't overwrite a path being read → stage via local checkpoint.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+        _overwrite_in_place(merged, path)

@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from news_lakehouse_spark.functions.keys import surrogate_key_safe
-from news_lakehouse_spark.operators.merge import upsert_parquet_table
+from news_lakehouse_spark.materialize import reuse
+from news_lakehouse_spark.operators.merge import _overwrite_in_place, upsert_parquet_table
 from news_lakehouse_spark.plans.gold import (
     build_gold_dimensions,
     build_gold_facts,
@@ -90,7 +91,7 @@ def _replace_scope(
         merged = kept.unionByName(source)
     else:  # first run — nothing to scope out
         merged = source
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+    _overwrite_in_place(merged, path)
 
 
 def refresh_gold_incremental(
@@ -122,29 +123,35 @@ def refresh_gold_incremental(
         dims = build_gold_dimensions(silver_delta)
         for name, df in dims.items():
             with pipeline_metrics(f"gold_{name}", table=name) as m:
-                # checkpoint once: the write and the row-count metric
+                # materialize once: the write and the row-count metric
                 # share one computation of the delta transformation
-                staged = df.localCheckpoint(eager=True)
-                upsert_parquet_table(
-                    spark,
-                    staged,
-                    f"{gold_root}/{name}",
-                    keys=DIM_KEYS[name],
-                    insert_only=(name == "dim_date"),
-                )
-                written[name] = m.records = staged.count()
+                staged, release = reuse(df)
+                try:
+                    upsert_parquet_table(
+                        spark,
+                        staged,
+                        f"{gold_root}/{name}",
+                        keys=DIM_KEYS[name],
+                        insert_only=(name == "dim_date"),
+                    )
+                    written[name] = m.records = staged.count()
+                finally:
+                    release()
 
         facts = build_gold_facts(silver_delta)
         for name, df in facts.items():
             with pipeline_metrics(f"gold_{name}", table=name) as m:
-                staged = df.localCheckpoint(eager=True)
-                _replace_scope(
-                    spark,
-                    staged,
-                    f"{gold_root}/{name}",
-                    FACT_SCOPE[name],
-                    changed_articles,
-                )
-                written[name] = m.records = staged.count()
+                staged, release = reuse(df)
+                try:
+                    _replace_scope(
+                        spark,
+                        staged,
+                        f"{gold_root}/{name}",
+                        FACT_SCOPE[name],
+                        changed_articles,
+                    )
+                    written[name] = m.records = staged.count()
+                finally:
+                    release()
         whole.records = sum(written.values())
     return written

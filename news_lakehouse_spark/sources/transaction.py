@@ -100,6 +100,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from news_lakehouse_spark.materialize import reuse
 from news_lakehouse_spark.sources.partition_spec import (
     fragment_tests,
     parse_partition_spec,
@@ -337,26 +338,6 @@ def _footer_raw_stats(abs_path: str, stat_cols: tuple) -> dict:
 # A pure-function memo (hash of a literal), NOT result caching: entries
 # are deterministic values independent of any table's data.
 _SPARK_HASH_MEMO: dict = {}
-
-
-def _materialize_churn(df: DataFrame):
-    """Materialize an O(churn) frame that several downstream actions
-    will consume; returns ``(frame, release)``.
-
-    Local mode (no checkpoint dir): ``localCheckpoint(eager=True)`` —
-    one job materializes the churn AND truncates its lineage, so every
-    later action (emptiness probes, merge key sets, the rewrite job)
-    plans against a flat in-memory RDD scan instead of re-analyzing
-    the full feed plan and re-running its AQE stage jobs. Cluster mode
-    (checkpoint dir configured, the 100 TB posture): a plain
-    recomputable ``persist`` — localCheckpoint blocks are pinned to
-    executors and one executor loss would fail the whole application,
-    the same trade :mod:`operators.iterstate` documents."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is None:
-        out = df.localCheckpoint(eager=True)
-        return out, (lambda: None)  # blocks reclaimed by ContextCleaner
-    out = df.persist()
-    return out, out.unpersist
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -4459,15 +4440,10 @@ class VersionedParquetTable:
         # which alone evaluates its source several times (key sets,
         # affected partitions, the rewrite). The feed is O(churn) by
         # construction, so materializing it once is always cheaper
-        # than re-deriving it from the table's history — and in local
-        # mode the materialization also TRUNCATES LINEAGE
-        # (localCheckpoint): every downstream action plans against a
-        # flat RDD scan instead of re-analyzing (and re-running AQE
-        # stage jobs over) the whole feed plan, which the r12 job
-        # profile showed costing more than the feed itself. Cluster
-        # mode keeps a recomputable persist: executor loss then
-        # recomputes the feed instead of failing the application.
-        feed, release = _materialize_churn(feed)
+        # than re-deriving it from the table's history (in local mode
+        # the r12 job profile showed re-analyzing the feed plan per
+        # action costing more than the feed itself).
+        feed, release = reuse(feed)
         try:
             inserts = feed.filter(F.col("_change_type") == "insert").drop(
                 "_change_type"

@@ -195,7 +195,7 @@ def test_personalized_pagerank_rejects_disjoint_seeds(spark):
 
 
 def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
-    """iterstate.truncate_lineage upgrades localCheckpoint to a
+    """materialize.cut upgrades localCheckpoint to a
     reliable checkpoint when the context has a checkpoint dir — the
     fault-tolerant mode a multi-hour cluster run needs — and the
     results are bit-identical across both modes."""
@@ -237,14 +237,15 @@ def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
 
 
 def test_truncator_bounds_checkpoint_storage(spark, tmp_path):
-    """ADVICE r10: reliable mode must not accumulate O(iterations x
-    state) on the checkpoint FS. LineageTruncator deletes round n-2's
-    rdd-* dir once round n lands (keep-2: the newest round plus its
-    parent, so convergence tests comparing consecutive rounds stay
-    readable), and the surviving frame still collects correctly."""
+    """ADVICE r10: neither mode may accumulate O(iterations x state).
+    LineageTruncator releases round n-2 once round n lands (keep-2: the
+    newest round plus its parent, so convergence tests comparing
+    consecutive rounds stay readable): its executor blocks in local
+    mode, its rdd-* dir in reliable mode. The surviving frames still
+    collect correctly."""
     import os
 
-    from news_lakehouse_spark.operators.iterstate import LineageTruncator
+    from news_lakehouse_spark.materialize import LineageTruncator
 
     def rdd_dirs(root):
         out = []
@@ -252,20 +253,34 @@ def test_truncator_bounds_checkpoint_storage(spark, tmp_path):
             out += [d for d in dirnames if d.startswith("rdd-")]
         return out
 
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        # direct: 6 chained rounds leave <=2 rdd dirs, last two rounds
-        # both remain readable
+    def six_rounds():
+        # 6 chained rounds; the last two rounds both remain readable
         t = LineageTruncator()
         df = spark.range(100).withColumnRenamed("id", "v")
         prev = None
         for i in range(6):
             df, prev = t(df.withColumn("v", F.col("v") + 1)), df
-        assert len(rdd_dirs(tmp_path / "ckpt")) <= 2
+        return df, prev
+
+    def assert_readable(df, prev):
         assert df.agg(F.sum("v")).collect()[0][0] == sum(range(100)) + 600
         assert prev.agg(F.sum("v")).collect()[0][0] == sum(range(100)) + 500
+
+    sc = spark.sparkContext
+    # local: at most the two newest rounds' blocks stay persisted
+    persisted = sc._jsc.sc().getPersistentRDDs
+    baseline = persisted().size()
+    df, prev = six_rounds()
+    assert persisted().size() <= baseline + 2
+    assert_readable(df, prev)
+
+    assert sc.getCheckpointDir() is None
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        # reliable: the same loop leaves <=2 rdd dirs
+        df, prev = six_rounds()
+        assert len(rdd_dirs(tmp_path / "ckpt")) <= 2
+        assert_readable(df, prev)
 
         # through an operator: pagerank's loop uses the truncator and
         # matches local mode exactly while leaving <=2 dirs + the

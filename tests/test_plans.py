@@ -60,7 +60,7 @@ def test_python_only_at_arrow_boundaries(spark, sf_dir):
     assert a["python_ops"] == 1
     # minhash: the vectorized signature kernel (shuffle-free numpy
     # minhash) runs ONCE inside the band-table materialization (r12:
-    # truncate_lineage — a shuffle-free Arrow subtree has no exchange
+    # materialize.cut — a shuffle-free Arrow subtree has no exchange
     # for AQE to reuse, so every consumer used to re-run the kernel);
     # the FINAL plan therefore shows no Python boundary at all and
     # reads the materialized band table instead
