@@ -24,6 +24,11 @@ Row counts are OPT-IN (pass `records` / `records_extractor`): counting
 a DataFrame forces a job, and metrics must never add a second pass over
 100 TB. Callers that already materialize (foreachBatch, writes) pass
 the count they have.
+
+Sinks may be called from several writer threads at once
+(`write_gold_tables` records each table from its own thread). The
+default sink's `list.append` is atomic under the interpreter lock; a
+custom sink must be thread-safe.
 """
 
 from __future__ import annotations

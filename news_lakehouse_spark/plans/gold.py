@@ -276,19 +276,45 @@ def write_gold_tables(
     analog of the reference's silver→gold job (gcs_silver_to_gold.py),
     with its per-ETL metrics wrapper (airflow/config/
     metrics_utils.py:9-55): one timed duration/rows/status record per
-    gold table plus one for the whole job. Row counts come from a
-    read-back count over the files just written (footer-bounded scan),
-    never a second pass over the build plan."""
+    gold table plus one for the whole job.
+
+    The 12 tables are independent, and a dimension's jobs are far too
+    small to fill the executors, so every write is submitted at once
+    from its own driver thread and Spark's scheduler shares the slots.
+    Each thread inherits the caller's local properties (job group,
+    scheduler pool, description), so cancelling the caller's job group
+    reaches every write. A table's row count is observed by the write
+    itself (``Dataset.observe``): no read-back scan, no second pass.
+
+    Every table is attempted and gets its metrics record; the call then
+    re-raises the first failure in table order, and the whole-job
+    record is marked failed."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import Observation
+
     from news_lakehouse_spark.metrics import pipeline_metrics
 
-    written: dict[str, int] = {}
+    def write(name: str, df: DataFrame) -> int:
+        with pipeline_metrics(f"gold_{name}", table=name) as m:
+            rows = Observation()
+            df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(f"{gold_root}/{name}")
+            m.records = rows.get["rows"]
+        return m.records
+
     with pipeline_metrics("write_gold_tables") as whole:
         tables = {**build_gold_dimensions(silver), **build_gold_facts(silver)}
-        for name, df in tables.items():
-            with pipeline_metrics(f"gold_{name}", table=name) as m:
-                path = f"{gold_root}/{name}"
-                df.write.mode("overwrite").parquet(path)
-                written[name] = m.records = spark.read.parquet(path).count()
+        with ThreadPoolExecutor(len(tables)) as pool:
+            # wrap per table: each target gets its own copy of the
+            # caller's local properties, which Spark mutates per query
+            futures = {
+                name: pool.submit(inheritable_thread_target(spark)(write), name, df)
+                for name, df in tables.items()
+            }
+        written = {name: f.result() for name, f in futures.items()}
         whole.records = sum(written.values())
     return written
 

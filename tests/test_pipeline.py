@@ -7,6 +7,7 @@ import json
 import random
 
 import pytest
+from pyspark.testing import assertDataFrameEqual
 
 from news_lakehouse_spark.plans.gold import (
     build_gold_dimensions,
@@ -200,6 +201,13 @@ def test_gold_pipelines_emit_metrics(spark, silver, tmp_path):
         assert m.labels == {"table": name}
     whole = batch["write_gold_tables"]
     assert whole.success and whole.records == sum(written.values())
+    # the count observed during the write is the row count on disk, and
+    # the files hold exactly the rows the build plans produce
+    expected = {**build_gold_dimensions(silver), **build_gold_facts(silver)}
+    for name, df in expected.items():
+        on_disk = spark.read.parquet(str(tmp_path / "gold_batch" / name))
+        assert written[name] == on_disk.count(), name
+        assertDataFrameEqual(on_disk, df.collect(), checkRowOrder=False)
 
     start = len(METRICS)
     written2 = refresh_gold_incremental(spark, silver, str(tmp_path / "gold_inc"))
@@ -207,3 +215,71 @@ def test_gold_pipelines_emit_metrics(spark, silver, tmp_path):
     for name in (*GOLD_DIMS, *GOLD_FACTS):
         assert inc[f"gold_{name}"].records == written2[name]
     assert inc["refresh_gold_incremental"].records == sum(written2.values())
+
+
+def test_gold_write_failure_attempts_every_table(spark, silver, tmp_path, monkeypatch):
+    """One gold table failing at run time must not stop the others: all
+    12 writes are attempted and recorded, the failure is re-raised, and
+    the call returns (no writer thread or Observation left waiting)."""
+    import threading
+
+    from pyspark.errors import PySparkException
+    from pyspark.sql import functions as F
+    from py4j.protocol import Py4JJavaError
+
+    from news_lakehouse_spark.metrics import METRICS
+    from news_lakehouse_spark.plans import gold
+
+    def failing_dims(silver):
+        dims = build_gold_dimensions(silver)
+        dims["dim_topic"] = dims["dim_topic"].withColumn(
+            "boom", F.raise_error(F.lit("injected gold failure")).cast("string")
+        )
+        return dims
+
+    monkeypatch.setattr(gold, "build_gold_dimensions", failing_dims)
+    root = tmp_path / "gold_fail"
+    outcome = {}
+
+    def call():
+        start = len(METRICS)
+        try:
+            gold.write_gold_tables(spark, silver, str(root))
+        except (PySparkException, Py4JJavaError) as e:
+            outcome["error"] = e
+        outcome["records"] = {m.job_name: m for m in METRICS[start:]}
+
+    t = threading.Thread(target=call, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "write_gold_tables did not return"
+    assert "injected gold failure" in str(outcome.get("error"))
+    records = outcome["records"]
+    assert not records["gold_dim_topic"].success
+    assert not records["write_gold_tables"].success
+    for name in (*gold.GOLD_DIMS, *gold.GOLD_FACTS):
+        if name == "dim_topic":
+            continue
+        m = records[f"gold_{name}"]
+        assert m.success, name
+        assert m.records == spark.read.parquet(str(root / name)).count(), name
+
+
+def test_gold_writes_inherit_caller_job_group(spark, silver, tmp_path):
+    """Every Spark job of the concurrent gold writes runs in the
+    caller's job group, so cancelling that group reaches all of them."""
+    from news_lakehouse_spark.plans.gold import write_gold_tables
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("gold-test", "concurrent gold writes")
+    try:
+        write_gold_tables(spark, silver, str(tmp_path / "gold_group"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    in_group = tracker.getJobIdsForGroup("gold-test")
+    assert len(in_group) >= 12  # at least one write job per table
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
