@@ -41,7 +41,11 @@ materialization job when the caller's very next action consumes the
 frame anyway: Spark's post-job checkpoint completes the truncation, so
 a convergence-probe loop pays one job per round instead of two.
 Cluster mode always materializes eagerly, so the state is on stable
-storage before the round is declared done.
+storage before the round is declared done. A loop that needs a
+per-round figure instead (a changed-label count, an edge-set
+fingerprint) puts an ``Observation`` on the frame it cuts eagerly:
+the materialization job fills it. On a lazily cut frame the
+Observation completes at once with zeros, before any job has run.
 
 Loops cut through a :class:`LineageTruncator`. Neither reliable
 checkpoints (``spark.cleaner.referenceTracking.cleanCheckpoints`` is

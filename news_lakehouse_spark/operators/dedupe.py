@@ -28,7 +28,7 @@ h_i(x) = (a_i * xxhash64(x) + b_i) mod p in both formulations.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from news_lakehouse_spark.materialize import LineageTruncator, cut
@@ -691,15 +691,20 @@ def connected_components(
     Two interchangeable plans (same output frame, same caller
     contract):
 
-    ``method="propagate"`` (default) — min-label propagation: each
+    ``method="propagate"`` (default) — min-label propagation as
+    Pregel-style vertex state (Malewicz et al., SIGMOD 2010): each
     round, every node takes the minimum of its own label and its
     neighbors' labels, until a fixpoint. Rounds are O(graph diameter);
     near-dup graphs are unions of small cliques (diameter 1-2), so
     convergence is 2-3 rounds in practice — the regime where plain
-    propagation beats the fancier alternatives. Each iteration is one
-    join + one groupBy on the label frame (never an all-pairs
-    expansion), with materialize.cut cutting each round's plan
-    the convergence check is a limit(1) probe.
+    propagation beats the fancier alternatives. The loop state is one
+    frame (id, lbl, nbrs) that carries its own adjacency, so a round
+    is ONE shuffle: each node's label sent to every neighbor unioned
+    with the nodes' own rows, one groupBy(id), never an all-pairs
+    expansion. The round is cut eagerly through materialize.cut, and
+    the count of nodes whose label dropped is an Observation on the
+    cut frame: the materialization job fills it, so convergence costs
+    no probe job.
 
     ``method="star"`` — alternating large-star/small-star (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14):
@@ -713,6 +718,9 @@ def connected_components(
     where propagation would need diameter rounds. Per round: two
     groupBy-min + two joins on the (shrinking) edge frame.
 
+    Both return every id that appears in ``pairs``; an id whose only
+    pair is a self-pair is its own component.
+
     Used by dedup_survivors to collapse near-dup PAIRS (minhash/
     simhash/embedding) into one surviving document per duplicate
     cluster.
@@ -721,55 +729,44 @@ def connected_components(
         return _connected_components_star(pairs, id_a, id_b, max_iters)
     if method != "propagate":
         raise ValueError(f"unknown method {method!r}: propagate | star")
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
-        .persist()
+    state = (
+        pairs.select(F.col(id_a).alias("id"), F.col(id_b).alias("nbr"))
+        .unionByName(pairs.select(F.col(id_b).alias("id"), F.col(id_a).alias("nbr")))
+        .groupBy("id")
+        .agg(F.collect_set("nbr").alias("nbrs"))
+        .select("id", F.least("id", F.array_min("nbrs")).alias("lbl"), "nbrs")
     )
-    # label = current best-known component min per node
-    labels = edges.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("lbl"))
-    labels = labels.select(F.col("a").alias("id"), F.least("lbl", "id").alias("lbl"))
-    # keeps the 2 newest rounds (the convergence test below reads
-    # rounds n and n-1 together), releases older ones
     _ckpt = LineageTruncator()
     for _ in range(max_iters):
-        # propagate: node's new label = min(own, min over neighbors' labels)
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("id", "b").withColumnRenamed("lbl", "nl"), "b")
-            .groupBy("a")
-            .agg(F.min("nl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(nbr_min.withColumnRenamed("a", "id"), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias("lbl"),
+        # each node's label to every neighbor, beside the node's own row;
+        # the missing columns are nulls typed like the id column
+        msgs = state.select(F.explode("nbrs").alias("id"), F.col("lbl").alias("msg"))
+        dropped = Observation()
+        state = _ckpt(
+            state.unionByName(msgs, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(
+                F.min("lbl").alias("lbl"),
+                F.first("nbrs", ignorenulls=True).alias("nbrs"),
+                F.min("msg").alias("msg"),
             )
-            .transform(_ckpt)  # truncate the iterative lineage
+            .observe(dropped, F.count_if(F.col("msg") < F.col("lbl")).alias("n"))
+            .select("id", F.least("lbl", "msg").alias("lbl"), "nbrs")
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        # read only after an EAGER cut: a lazy cut reports 0 before any
+        # job has run
+        if dropped.get["n"] == 0:
             break
     else:
         # silently returning split components would let dedup keep
         # several "survivors" from one duplicate cluster
-        edges.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} "
             "iterations (graph diameter exceeds the round budget); "
             'raise max_iters or switch to method="star" '
             "(large-star/small-star, O(log^2 n) rounds)"
         )
-    edges.unpersist()
-    return labels.select(F.col("id"), F.col("lbl").alias("component"))
+    return state.select(F.col("id"), F.col("lbl").alias("component"))
 
 
 def _connected_components_star(
@@ -789,18 +786,29 @@ def _connected_components_star(
     Both operators preserve connectivity (lemmas 1-2 of the paper) and
     never emit more edges than the bidirected input; alternating them
     converges to per-component stars centered on the component minimum
-    in O(log^2 n) rounds. Convergence = the (count, xxhash64-sum)
-    fingerprint of the edge set is stable across a full round — two
-    tiny aggregate actions per round; materialize.cut cuts the
-    iterative lineage exactly as the propagation plan does.
+    in O(log^2 n) rounds. Self-pairs (v, v) ride along in the state
+    untouched by the rewiring, so an id whose only pair is a self-pair
+    still comes out as its own component. Convergence = the
+    (count, bit_xor(xxhash64)) fingerprint of the edge set is stable
+    across a full round; it is an Observation on the round's eager
+    cut, so the materialization job computes it and no aggregate job
+    runs.
     """
     _ckpt = LineageTruncator()  # bounded checkpoint retention
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(_ckpt)
-    )
+
+    def _round(e: DataFrame) -> tuple[DataFrame, tuple]:
+        # bit_xor: order-insensitive and overflow-free (ANSI-safe where
+        # a sum of hashes is not); sound on a DISTINCT edge set
+        fp = Observation()
+        out = _ckpt(
+            e.observe(
+                fp,
+                F.count(F.lit(1)).alias("n"),
+                F.expr("bit_xor(xxhash64(a, b))").alias("h"),
+            )
+        )
+        got = fp.get
+        return out, (got["n"], got["h"])
 
     def _bidir(e: DataFrame) -> DataFrame:
         return e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -829,23 +837,14 @@ def _connected_components_star(
         centers = mins.select("a", F.col("m").alias("b"))
         return rewired.unionByName(centers).distinct()
 
-    def _fingerprint(e: DataFrame) -> tuple:
-        # bit_xor: order-insensitive and overflow-free (ANSI-safe where
-        # a sum of hashes is not); sound on a DISTINCT edge set
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    fp = _fingerprint(edges)
+    loop = F.col("a") == F.col("b")
+    edges, fp = _round(
+        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct()
+    )
     for _ in range(max_iters):
-        # lazy local checkpoint: the fingerprint aggregate right below
-        # touches every partition, so IT materializes the round's edge
-        # set — one job per round instead of checkpoint-then-agg (the
-        # reliable/cluster mode stays eager inside the truncator)
-        edges = _ckpt(_small_star(_large_star(edges)), eager=False)
-        new_fp = _fingerprint(edges)
+        edges, new_fp = _round(
+            _small_star(_large_star(edges.filter(~loop))).unionByName(edges.filter(loop))
+        )
         if new_fp == fp:
             break
         fp = new_fp
@@ -855,13 +854,15 @@ def _connected_components_star(
             f"{max_iters} rounds — not expected for any graph below "
             f"~2^{max_iters // 2} nodes; raise max_iters"
         )
-    # converged: edges are (member, component-min) stars
+    # converged: non-loop edges are (member, component-min) stars; a
+    # self-pair node also in a star takes the star's smaller center
     return (
         edges.select(F.col("a").alias("id"), F.col("b").alias("component"))
         .unionByName(
             edges.select(F.col("b").alias("id"), F.col("b").alias("component"))
         )
-        .distinct()
+        .groupBy("id")
+        .agg(F.min("component").alias("component"))
     )
 
 

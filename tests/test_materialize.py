@@ -1,9 +1,11 @@
 """Cluster mode of the materialization policy (news_lakehouse_spark/
 materialize.py): with a checkpoint dir set, every in-place overwrite
 stages through a reliable checkpoint and every change-feed consumer
-through a recomputable persist. Results must equal local mode, the
-staging checkpoints must be deleted once the write is done, and the
-persisted feeds must be released."""
+through a recomputable persist, and every loop round through a
+reliable checkpoint. Results must equal local mode, the staging
+checkpoints must be deleted once the write is done, the persisted
+feeds must be released, and a loop must keep a bounded number of
+rounds on the checkpoint filesystem."""
 
 from __future__ import annotations
 
@@ -12,7 +14,10 @@ from contextlib import contextmanager
 
 from pyspark.sql import Row
 
+import pytest
+
 from news_lakehouse_spark.operators.compact import compact_parquet_table
+from news_lakehouse_spark.operators.dedupe import connected_components
 from news_lakehouse_spark.operators.matview import IncrementalAggView
 from news_lakehouse_spark.operators.merge import delete_rows, upsert_parquet_table
 from news_lakehouse_spark.sources.transaction import VersionedParquetTable
@@ -152,3 +157,25 @@ def test_feed_consumers_cluster_mode_match_local_and_release(
     before, after = cluster[2:]
     assert after == before
     assert _rdd_dirs(tmp_path / "ckpt") == []
+
+
+def test_connected_components_cluster_mode_match_local(spark, tmp_path, monkeypatch):
+    """The propagate loop reads its convergence count from each round's
+    reliable checkpoint, so cluster mode converges in the same rounds
+    with the same rows, and raises the same way on a short budget."""
+    # a 10-node path (9 rounds), a triangle, and a self-pair
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)] + [(20, 21), (21, 22), (22, 20), (30, 30)],
+        ["id_a", "id_b"],
+    )
+    local = sorted(tuple(r) for r in connected_components(pairs).collect())
+    with _cluster_mode(spark, tmp_path / "ckpt", monkeypatch) as taken:
+        cluster = sorted(tuple(r) for r in connected_components(pairs).collect())
+        # one reliable checkpoint per round; only the returned round and
+        # its parent are still on the checkpoint filesystem
+        assert len(taken) == 9
+        assert len(_rdd_dirs(tmp_path / "ckpt")) <= 2
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(pairs, max_iters=2)
+    assert cluster == local
+    assert dict(local)[9] == 0 and dict(local)[22] == 20 and dict(local)[30] == 30
